@@ -18,6 +18,13 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.registry import Tables
+from ai_dataingestion_spark.scale import (
+    ARRAY_TABLE_BYTES,
+    bounded_self_join,
+    hint_array_side,
+    hint_merge_if_large,
+    table_bytes_under,
+)
 
 # MinHash constants (FIXTURES.md): 3-token shingles, 32 seeds, 8 bands x 4 rows.
 SHINGLE_K = 3
@@ -98,8 +105,6 @@ def _small_corpus(sf_dir: str, table: str = "documents") -> bool:
     statically broadcast: at 256 MiB of documents that bound is ~1M hashes /
     ~8 MB — comfortably broadcastable — while at lake scale the gate fails
     closed and AQE's runtime size check decides (ADVICE r4)."""
-    from ai_dataingestion_spark.scale import table_bytes_under
-
     return table_bytes_under(sf_dir, table, _SMALL_CORPUS_BYTES)
 
 
@@ -205,13 +210,14 @@ _CW_A = [(i * 2654435761 + 104729) % _MERSENNE_P or 1 for i in range(N_HASHES)]
 _CW_B = [(i * 40503 + 7919) % _MERSENNE_P for i in range(N_HASHES)]
 
 
-def _minhash_band_bucket(prefix: str, b: int) -> str:
-    """Band-bucket combine (both dialects): polynomial roll of the band's 4
+def _minhash_band_bucket(prefix: str, b: int, r: int = ROWS_PER_BAND) -> str:
+    """Band-bucket combine (both dialects): polynomial roll of band b's r
     minhash values — each value < 2^31, so ((((b*31+h)*31+h)...) stays well
-    under 2^63 with 31-ary rolling over 4 values mod P per step."""
+    under 2^63 with 31-ary rolling mod P per step, overflow-free in both
+    engines."""
     expr = str(b)
-    for r in range(ROWS_PER_BAND):
-        expr = f"(({expr}) * 31 + {prefix}{b * ROWS_PER_BAND + r}) % {_MERSENNE_P}"
+    for k in range(r):
+        expr = f"(({expr}) * 31 + {prefix}{b * r + k}) % {_MERSENNE_P}"
     return f"CAST({expr} AS BIGINT)"
 
 
@@ -229,6 +235,60 @@ def _cw_sig_agg_exprs() -> list:
         F.expr(f"min(({_CW_A[i]} * hm + {_CW_B[i]}) % {_MERSENNE_P}) AS h{i}")
         for i in range(N_HASHES)
     ]
+
+
+# ---------------------------------------------------------------------------
+# The MinHash-LSH kernel, one stage per function, shared by every MinHash
+# operator (dedup_near_minhash, dedup_eval_precision_recall,
+# dedup_minhash_estimate_error, dedup_lsh_band_tuning, dedup_removal_plan).
+# Each stage is one parsed SQL string (optimization r17): the per-term
+# Column loops (32 CW aggregates, 8 band structs) cost ~0.5 s of py4j
+# round trips + eager per-step re-analysis per invocation. Caching the
+# signature and the exact-Jaccard verify join stay with the callers, whose
+# plans differ there.
+# ---------------------------------------------------------------------------
+
+
+def minhash_shingles(corpus: DataFrame) -> DataFrame:
+    """(doc_id, shingles) of a (doc_id, text) corpus, op_cached: exploding a
+    generator whose input is the shingle transform over the corpus UNION
+    re-evaluates the tokenization pathologically (measured 60+ s/pass vs
+    0.3 s from cache on the extremes tier's giant docs, round 10), and the
+    same relation feeds the callers' exact-Jaccard verify."""
+    return (
+        corpus.withColumn("toks", F.split("text", " "))
+        .selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
+        .transform(op_cache)
+    )
+
+
+def minhash_signature(docs: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{N_HASHES-1}) from minhash_shingles output: ONE
+    portable md5-derived base hash per shingle, then the Carter-Wegman
+    minimums — one shuffle, on doc_id."""
+    return (
+        docs.selectExpr("doc_id", "explode(shingles) AS shingle")
+        .selectExpr("doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm")
+        .groupBy("doc_id")
+        .agg(*_cw_sig_agg_exprs())
+    )
+
+
+def minhash_candidates(sig: DataFrame, sf_dir: str) -> DataFrame:
+    """Distinct (id1 < id2) pairs sharing a band bucket: N_BANDS ×
+    ROWS_PER_BAND banding as ONE inline() over the band structs, then the
+    shared bounded pair generator (scale.py) — unhinted/estimator-driven at
+    provably-small corpus bytes, spillable sort-merge once the text-derived
+    banded relation stops being provably tiny."""
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {_minhash_band_bucket('h', b)})"
+        for b in range(N_BANDS)
+    )
+    banded = sig.selectExpr("doc_id", f"inline(array({band_structs}))")
+    return bounded_self_join(
+        banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
+        gate=ARRAY_TABLE_BYTES,
+    ).distinct()
 
 
 def _simhash_vote_agg_exprs() -> list:
@@ -326,41 +386,8 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are groupBy(doc_id) for signatures and the (band, bucket)
     equality join — candidate verification touches candidate pairs only.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    # op_cache: exploding a generator whose input is the shingle transform
-    # over the corpus UNION re-evaluates the tokenization pathologically
-    # (measured 60+ s/pass vs 0.3 s from cache on the extremes tier's
-    # giant docs, round 10) — materialize once, explode from the cache
-    docs = corpus.selectExpr(
-        "doc_id", f"{_SHINGLES_EXPR} AS shingles"
-    ).transform(op_cache)
-
-    # Optimization r17 (guide §5, driver-side work): one parsed SQL string
-    # per stage — the per-term Column loops (32 CW aggregates, 8 band
-    # structs) measured ~0.5 s of py4j round trips + eager per-step
-    # re-analysis per invocation on this operator family.
-    pairs = docs.selectExpr("doc_id", "explode(shingles) AS shingle").selectExpr(
-        "doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm"
-    )
-    sig = pairs.groupBy("doc_id").agg(*_cw_sig_agg_exprs())
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'bucket', {_minhash_band_bucket('h', b)})"
-        for b in range(N_BANDS)
-    )
-    banded = sig.selectExpr("doc_id", f"inline(array({band_structs}))")
-
-    # shared bounded pair generator (scale.py): unhinted/estimator-driven at
-    # provably-small corpus bytes (plan identical to the pre-helper one at
-    # bench SF), spillable sort-merge once the text-derived banded relation
-    # stops being provably tiny
-    from ai_dataingestion_spark.scale import ARRAY_TABLE_BYTES, bounded_self_join
-
-    cand = bounded_self_join(
-        banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
-        gate=ARRAY_TABLE_BYTES,
-    ).distinct()
+    docs = minhash_shingles(_corpus_with_near_dups(spark, sf_dir))
+    cand = minhash_candidates(minhash_signature(docs), sf_dir)
 
     sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
     sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
@@ -370,8 +397,6 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats under-count the arrays, so Catalyst would broadcast it and
     # OOM the driver at 10x (the documented scale.py failure mode —
     # surfaced here by the round-10 op_cache)
-    from ai_dataingestion_spark.scale import hint_array_side
-
     return (
         cand.join(hint_array_side(sh1, sf_dir, "documents"), "id1")
         .join(hint_array_side(sh2, sf_dir, "documents"), "id2")
@@ -483,8 +508,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through a size-tiered wide exchange (AQE cannot coalesce an explicit
     # repartition) that the distinct reuses. All via the shared bounded
     # pair generator (scale.py; 1 MiB gate — signatures derive from text).
-    from ai_dataingestion_spark.scale import ARRAY_TABLE_BYTES, bounded_self_join
-
     cand = bounded_self_join(
         chunked, ["chunk_idx", "chunk_val"], "doc_id", sf_dir, "documents",
         gate=ARRAY_TABLE_BYTES, spark=spark,
@@ -494,8 +517,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming = F.expr(
         "aggregate(zip_with(ch1, ch2, (x, y) -> bit_count(x ^ y)), 0, (a, v) -> a + v)"
     )
-    from ai_dataingestion_spark.scale import hint_merge_if_large
-
     return (
         cand.join(
             hint_merge_if_large(c1, sf_dir, "documents", ARRAY_TABLE_BYTES), "id1"
@@ -607,12 +628,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count common rare shingles per pair; 3*I >= |A|+|B| is EXACTLY
     # J >= 0.5 when the DF cap doesn't bite, so almost all of the ~1.6M raw
     # candidate pairs die on integer counts before any array work
-    from ai_dataingestion_spark.scale import (
-        ARRAY_TABLE_BYTES,
-        bounded_self_join,
-        hint_array_side,
-    )
-
     cand = (
         bounded_self_join(
             rare, ["h"], "doc_id", sf_dir, "documents", gate=ARRAY_TABLE_BYTES
@@ -722,8 +737,6 @@ def dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv = fp.select("doc_id", F.explode("fingerprint").alias("h"))
     rare_h = inv.groupBy("h").count().filter(F.col("count") <= _FP_DF_CAP).select("h")
     rare = inv.join(rare_h, "h")
-    from ai_dataingestion_spark.scale import ARRAY_TABLE_BYTES, bounded_self_join
-
     return (
         bounded_self_join(
             rare, ["h"], "doc_id", sf_dir, "documents", gate=ARRAY_TABLE_BYTES
@@ -812,12 +825,6 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
     inv = shingle_rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
     rare = _rare_shingle_index(inv, cap=50, small_corpus=_small_corpus(sf_dir))
-    from ai_dataingestion_spark.scale import (
-        ARRAY_TABLE_BYTES,
-        bounded_self_join,
-        hint_array_side,
-    )
-
     # ordered=False: containment roles are asymmetric (small-in-big), so
     # both pair directions are emitted and the containment filter decides
     cand = (

@@ -27,10 +27,7 @@ plan-equality pins prove it rather than assert it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.registry import register_views
+from ai_dataingestion_spark.catalog import register_sql
 
 # name -> (pipe-form Spark SQL, classic-form SPARK SQL twin). The twin is
 # the plan-equality anchor (tests/test_plans.py asserts sameSemantics); for
@@ -46,14 +43,7 @@ def _pipe_op(name: str, pipe_sql: str, classic_sql: str, doc: str,
     oracle runs `oracle` (default: the classic twin), and the
     (pipe, classic-Spark) pair is exported for the plan-equality pin."""
     PIPE_CLASSIC_PAIRS[name] = (pipe_sql, classic_sql)
-
-    def _fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(pipe_sql)
-
-    _fn.__name__ = name
-    _fn.__doc__ = doc
-    return register(name, oracle=oracle or classic_sql, doc=doc)(_fn)
+    return register_sql(name, pipe_sql, oracle or classic_sql, doc)
 
 
 # ---------------------------------------------------------------------------

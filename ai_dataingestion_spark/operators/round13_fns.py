@@ -25,31 +25,14 @@ Dialect notes pinned by these oracles:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.registry import register_views
-
-
-def _sql_op(name: str, spark_sql, oracle: str, doc: str):
-    stmts = (spark_sql,) if isinstance(spark_sql, str) else tuple(spark_sql)
-
-    def _fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        for stmt in stmts[:-1]:
-            spark.sql(stmt)
-        return spark.sql(stmts[-1])
-
-    _fn.__name__ = name
-    _fn.__doc__ = doc
-    return register(name, oracle=oracle, doc=doc)(_fn)
+from ai_dataingestion_spark.catalog import register_sql
 
 
 # ---------------------------------------------------------------------------
 # fn_listagg_within_group — ordered string aggregation
 # ---------------------------------------------------------------------------
 
-_sql_op(
+register_sql(
     "fn_listagg_within_group",
     spark_sql="""
 SELECT n_regionkey,
@@ -82,7 +65,7 @@ GROUP BY n_regionkey
 # fn_null_safety_family — zeroifnull / nullifzero / nvl2 / ifnull
 # ---------------------------------------------------------------------------
 
-_sql_op(
+register_sql(
     "fn_null_safety_family",
     spark_sql="""
 SELECT c_mktsegment,
@@ -123,7 +106,7 @@ GROUP BY c_mktsegment
 # fn_datetime_names — dayname / monthname
 # ---------------------------------------------------------------------------
 
-_sql_op(
+register_sql(
     "fn_datetime_names",
     spark_sql="""
 SELECT dayname(o_orderdate) AS dn,
@@ -158,7 +141,7 @@ GROUP BY strftime(o_orderdate, '%a'), strftime(o_orderdate, '%b')
 # sql_session_variables — DECLARE VARIABLE / SET VAR / IDENTIFIER(var)
 # ---------------------------------------------------------------------------
 
-_sql_op(
+register_sql(
     "sql_session_variables",
     spark_sql=(
         "DECLARE OR REPLACE VARIABLE graft_z_tbl STRING DEFAULT 'customer'",

@@ -27,11 +27,6 @@ from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
 
 
-def _dec_sum(col):
-    """Engine-exact money-product sum (see operators/advanced.py)."""
-    return F.sum(col.cast("decimal(38,6)"))
-
-
 _NET = "(l_extendedprice * (1 - l_discount))"
 
 

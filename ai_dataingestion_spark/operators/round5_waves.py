@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
+    pround,
     stable_rounded_sum,
     stable_rounded_sum_sql,
     stable_sum,
@@ -29,10 +30,11 @@ from ai_dataingestion_spark.ai.dedup import (
     _MERSENNE_P,
     _SHINGLES_EXPR,
     _corpus_with_near_dups,
-    _cw_sig_agg_exprs,
     _duck_h,
     _minhash_band_bucket,
-    _spark_h,
+    minhash_candidates,
+    minhash_shingles,
+    minhash_signature,
     N_BANDS,
     N_HASHES,
     SHINGLE_K,
@@ -51,13 +53,6 @@ import os
 # blocked edit-distance dedup, alternative means, a per-column data-quality
 # matrix, and a per-dimension label-separability (eta-squared) profile over
 # the embedding corpus.
-#
-# These register AFTER round5.py, and every ID here is listed in
-# catalog._DEFER_TO_NEXT_ROUND: the r5 driver window is exactly full (45
-# rank-0 + 2 re-checks + 3 rows-only), so these defer to rank 3 and rotate
-# into the r6 window. Meanwhile each is oracle-verified by the local driver
-# sim and the Tier-2 parity sweep (tests/test_oracle_parity.py picks up
-# every registered oracle automatically).
 #
 # Float discipline follows SURVEY.md §5.4: money-product sums in
 # DECIMAL(38,6) rounded in the decimal domain; ratios/doubles rounded at
@@ -865,9 +860,6 @@ def embed_label_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and dynamic partition pruning through a join), cohort lifetime value,
 # brand co-purchase lift, calendar hour-gap detection, activity survival
 # curves, bigram conditional entropy, and binary-codec function parity.
-#
-# Deferred to the r6 driver window like round5b (catalog
-# ._DEFER_TO_NEXT_ROUND); locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 # ---------------------------------------------------------------------------
@@ -1372,9 +1364,6 @@ def fn_string_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ratios so Spark and DuckDB evaluate the IDENTICAL expression (the
 # agg_higher_moments rule: built-in corr/stddev differ in bias correction
 # across engines); 6-dp rounding absorbs summation order.
-#
-# Deferred to the r6 driver window like round5b/c (catalog
-# ._DEFER_TO_NEXT_ROUND); locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -1681,9 +1670,6 @@ def orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # similarity, and the PCA flagship: dominant principal component of the
 # embedding corpus via a partial-Gram Arrow kernel + five unrolled power
 # iterations on the 64×64 covariance.
-#
-# Deferred to the r6 driver window like round5b/c/d (catalog
-# ._DEFER_TO_NEXT_ROUND); locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -2048,9 +2034,6 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arithmetic (try_*), permissive malformed-CSV ingestion with corrupt-
 # record capture, CUSUM changepoint detection on the daily shipment
 # series, and fine-grained error-burst detection over 5-minute buckets.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -2264,9 +2247,6 @@ def events_error_burst_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
 # referential-integrity audit with injected violations, a time-bounded
 # conversion funnel (each step within 24 h of the previous), and MinHash
 # estimate-vs-exact Jaccard calibration over known near-dup pairs.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _EPOCH = "DATE '2024-01-01'"
@@ -2632,32 +2612,12 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_near_minhash (oracle-identical end-to-end); the estimate k/32
     is binary-exact so only the exact-Jaccard ratio needs the portable
     floor(x·1e6+0.5)/1e6 rounding (SURVEY §5.4 round-tie trap)."""
-    from ai_dataingestion_spark.ai.dedup import (
-        _DUP_OFFSET,
-        _MERSENNE_P,
-        _SHINGLES_EXPR,
-        _corpus_with_near_dups,
-        _cw_sig_agg_exprs,
-        _spark_h,
-        N_HASHES,
-    )
-
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    # op_cache: the shingled relation feeds the signature AND the exact-
-    # Jaccard verify; uncached, the shingle-over-union explode re-runs
-    # pathologically on giant docs (extremes tier, round 10)
-    docs = corpus.selectExpr(
-        "doc_id", f"{_SHINGLES_EXPR} AS shingles"
-    ).transform(op_cache)
-    sp = docs.selectExpr("doc_id", "explode(shingles) AS shingle").selectExpr(
-        "doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm"
-    )
+    # the shingled relation (op_cached by the kernel) feeds the signature
+    # AND the exact-Jaccard verify.
+    docs = minhash_shingles(_corpus_with_near_dups(spark, sf_dir))
     # cache: both pair sides consume sig — uncached, Spark replays the
     # explode + 32-min aggregation per side. docs-count-sized (33 cols).
-    # r17: one parsed expression per CW aggregate (driver-build cost).
-    sig = sp.groupBy("doc_id").agg(*_cw_sig_agg_exprs()).transform(op_cache)
+    sig = minhash_signature(docs).transform(op_cache)
     a = sig.alias("a")
     b = sig.alias("b")
     n_eq = sum(
@@ -2695,9 +2655,6 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # continuous percentile parity, two-step event path mining, the shingle
 # document-frequency spectrum (the introspection that justifies the
 # rare-shingle DF cap), and a per-type ingestion freshness report.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -2919,18 +2876,7 @@ def sim_cosine_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # injected duplicates, ship-latency quantiles per supplier nation, the
 # string-formatting parity family, and a deterministic A/B two-proportion
 # z-test.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
-
-def _pround(col, dp: int = 6):
-    """Portable IEEE rounding floor(x*10^dp + 0.5)/10^dp — bit-identical
-    on both engines (built-in round() diverges on exact decimal ties;
-    see tpch_q2_min_cost_supplier)."""
-    scale = 10**dp
-    return F.floor(col * scale + 0.5) / scale
-
 
 _SESSION_BOUNDS_SQL = """
 seq AS (
@@ -3143,7 +3089,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "day",
             "n",
-            _pround(z).alias("robust_z"),
+            pround(z).alias("robust_z"),
             F.when(F.abs(z) > 3.5, 1).otherwise(0).cast("int").alias(
                 "is_anomaly"
             ),
@@ -3262,7 +3208,7 @@ def lineitem_ship_latency_by_nation(
     )
     return joined.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n"),
-        _pround(
+        pround(
             F.sum("d").cast("double") / F.count(F.lit(1))
         ).alias("avg_days"),
         F.expr(
@@ -3428,9 +3374,9 @@ def events_ab_proportion_ztest(
         "n_b",
         "conv_a",
         "conv_b",
-        _pround(ra).alias("rate_a"),
-        _pround(rb).alias("rate_b"),
-        _pround(z).alias("z_score"),
+        pround(ra).alias("rate_a"),
+        pround(rb).alias("rate_b"),
+        pround(z).alias("z_score"),
     )
 
 
@@ -3441,25 +3387,12 @@ def events_ab_proportion_ztest(
 # extraction, chunk-granularity inter-document duplication ratio
 # (MassiveText-style filter), a schema-evolution mergeSchema scan, and a
 # parquet compression-codec round-trip sink.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 # (bands, rows_per_band) sweep configs — all consume the same 32-value
 # signature. r >= 2 keeps single-hash buckets (threshold 0.03, quadratic
 # hot buckets) out of the sweep.
 _TUNE_CONFIGS = [(16, 2), (8, 4), (4, 8), (2, 16)]
-
-
-def _bucket_poly(prefix: str, band: int, r: int) -> str:
-    """Polynomial band-bucket roll over r signature values (both SQL
-    dialects): every intermediate stays < 2^62, overflow-free in both
-    engines (the _minhash_band_bucket idiom, generalized over r)."""
-    expr = str(band)
-    for k in range(r):
-        expr = f"(({expr}) * 31 + {prefix}{band * r + k}) % {_MERSENNE_P}"
-    return f"CAST({expr} AS BIGINT)"
 
 
 _SIG_CTES = f"""
@@ -3490,7 +3423,7 @@ sig AS MATERIALIZED (
 
 def _tune_config_sql(b: int, r: int) -> str:
     banded = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band, {_bucket_poly('h', j, r)} AS bucket FROM sig"
+        f"SELECT doc_id, {j} AS band, {_minhash_band_bucket('h', j, r)} AS bucket FROM sig"
         for j in range(b)
     )
     return f"""
@@ -3533,21 +3466,12 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trip AND an eager re-analysis of the growing plan, so the loops below
     # now emit ONE parsed SQL string per stage (selectExpr / F.expr): the
     # 30-struct banding explode is a single inline() call, the 32 CW
-    # aggregates are one parse each (_cw_sig_agg_exprs), and the 4-row
-    # config frame is one stack() literal. Build time measured 1.65 s ->
-    # 0.50 s warm; the parsed trees are term-for-term the Column forms.
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    pairs = (
-        # op_cache: the uncached shingle-over-union explode re-tokenizes
-        # pathologically on giant docs (extremes tier, round 10)
-        corpus.selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
-        .transform(op_cache)
-        .selectExpr("doc_id", "explode(shingles) AS shingle")
-        .selectExpr("doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm")
-    )
-    sig = pairs.groupBy("doc_id").agg(*_cw_sig_agg_exprs()).transform(op_cache)
+    # aggregates are one parse each (the minhash_signature kernel stage),
+    # and the 4-row config frame is one stack() literal. Build time
+    # measured 1.65 s -> 0.50 s warm; the parsed trees are term-for-term
+    # the Column forms.
+    docs = minhash_shingles(_corpus_with_near_dups(spark, sf_dir))
+    sig = minhash_signature(docs).transform(op_cache)
 
     # Optimization r16 (guide §2.4 + §3.3 plan-size note): the first draft
     # looped the four (bands, rows) configs into four separate
@@ -3562,7 +3486,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so pairs never cross configurations.
     structs = ", ".join(
         f"named_struct('bands', {b}, 'rows_per_band', {r}, 'band', {j}, "
-        f"'bucket', {_bucket_poly('h', j, r)})"
+        f"'bucket', {_minhash_band_bucket('h', j, r)})"
         for b, r in _TUNE_CONFIGS
         for j in range(b)
     )
@@ -3588,7 +3512,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pre-fusion emission. repr() round-trips the double exactly, and
     # the D suffix keeps the SQL literal a DOUBLE (a bare decimal literal
     # parses as DECIMAL and would change the output type); the floor-based
-    # 6-dp rounding stays in SQL, identical to _pround.
+    # 6-dp rounding stays in SQL, identical to pround.
     stack_args = ", ".join(
         f"{b}, {r}, floor({(1.0 / b) ** (1.0 / r)!r}D * 1000000 + 0.5) / 1000000"
         for b, r in _TUNE_CONFIGS
@@ -3691,7 +3615,7 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .crossJoin(F.broadcast(n_uni))
         .crossJoin(F.broadcast(n_big_all))
-        .select("w1", "w2", F.col("c").alias("n_pair"), _pround(pmi).alias("pmi"))
+        .select("w1", "w2", F.col("c").alias("n_pair"), pround(pmi).alias("pmi"))
     )
     w = Window.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2"))
     return (
@@ -3791,7 +3715,7 @@ def text_chunk_dup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_chunks",
         "dup_chunks",
-        _pround(ratio).alias("dup_ratio"),
+        pround(ratio).alias("dup_ratio"),
         F.when(ratio >= 0.5, 1).otherwise(0).cast("int").alias(
             "is_mostly_duplicate"
         ),
@@ -3888,9 +3812,6 @@ def sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # end-to-end dedup REMOVAL PLAN composing exact / near / chunk dedup with
 # priority semantics, JSONL schema inference, and numeric RANGE window
 # frames.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _ARRIVAL_BUCKET = 1000  # events per arrival bucket (event_id DIV 1000)
@@ -4111,34 +4032,12 @@ def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") > 1)
         .select("doc_id", F.lit("exact").alias("reason"), F.lit(1).alias("prio"))
     )
-    # stage 2: MinHash LSH near-dup — remove the larger id of each pair
-    # the shingle relation feeds the signature build AND both verify
-    # sides of the candidate join: cache it (MEMORY_AND_DISK — spills,
-    # never OOMs) so the explode+dedup of shingles runs once, not 3x
-    # Optimization r17 (guide §5, driver-side work): build the signature
-    # and banding stages as ONE parsed SQL string each — the per-term
-    # Column loops (32 CW aggregates, 8 band structs) cost ~0.5 s of py4j
-    # round trips + eager per-step re-analysis per invocation (the same
-    # driver-build wall measured on dedup_lsh_band_tuning; phase split:
-    # build 0.85 s vs analyze+optimize+physical 0.11 s at sf0.1).
-    docs = corpus.withColumn("toks", F.split("text", " ")).selectExpr(
-        "doc_id", f"{_SHINGLES_EXPR} AS shingles"
-    ).transform(op_cache)
-    sig = (
-        docs.selectExpr("doc_id", "explode(shingles) AS shingle")
-        .selectExpr("doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm")
-        .groupBy("doc_id")
-        .agg(*_cw_sig_agg_exprs())
-    )
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'bucket', {_minhash_band_bucket('h', b)})"
-        for b in range(N_BANDS)
-    )
-    banded = sig.selectExpr("doc_id", f"inline(array({band_structs}))")
-    cand = bounded_self_join(
-        banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
-        gate=_ARRAY_MERGE_LIMIT,
-    ).distinct()
+    # stage 2: MinHash LSH near-dup — remove the larger id of each pair.
+    # The kernel's op_cached shingle relation feeds the signature build AND
+    # both verify sides of the candidate join, so the explode+dedup of
+    # shingles runs once, not 3x.
+    docs = minhash_shingles(corpus)
+    cand = minhash_candidates(minhash_signature(docs), sf_dir)
     sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
     sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
@@ -4248,9 +4147,6 @@ def win_range_numeric_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 twelfth wave (SURVEY.md §2.Q, continued): session bounce
 # rate, embedding label-confusion matrix, per-brand Pareto coverage
 # depth, and IANA timezone conversion parity.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -4319,7 +4215,7 @@ def events_sessions_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_session.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_sessions"),
         bounces.cast("bigint").alias("n_bounces"),
-        _pround(bounces.cast("double") / F.count(F.lit(1))).alias(
+        pround(bounces.cast("double") / F.count(F.lit(1))).alias(
             "bounce_rate"
         ),
     )
@@ -4412,7 +4308,7 @@ def embed_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.col("label").alias("true_label"),
             "other_label",
-            _pround(d2).alias("d2"),
+            pround(d2).alias("d2"),
         )
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "other_label")
@@ -4491,7 +4387,7 @@ def brand_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("parts_to_80pct"),
-        _pround(
+        pround(
             F.max(F.when(F.col("rn") == 1, F.col("r")))
             .cast("double")
             / F.max("tot").cast("double")
@@ -4548,9 +4444,6 @@ def fn_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # interpolation gap fill (the two-sided sibling of LOCF), supplier
 # market-concentration HHI, binary-payload exact dedup over the
 # multimodal column, and winsorized robust statistics.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -4658,7 +4551,7 @@ def events_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     pd_ = F.last(obs_day, ignorenulls=True).over(wb)
     nv = F.last("day_value", ignorenulls=True).over(wf)
     nd = F.last(obs_day, ignorenulls=True).over(wf)
-    interp = _pround(
+    interp = pround(
         pv
         + (nv - pv)
         * (
@@ -4740,7 +4633,7 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = F.sum("r").cast("decimal(38,2)")
     return rev.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_suppliers"),
-        _pround(
+        pround(
             F.sum(F.col("r") * F.col("r")).cast("double")
             / (tot * tot).cast("double")
         ).alias("hhi"),
@@ -4872,10 +4765,10 @@ def events_value_winsorized_stats(
         .groupBy("event_type")
         .agg(
             n.alias("n"),
-            _pround(
+            pround(
                 F.sum(F.col("value").cast("decimal(38,6)")).cast("double") / n
             ).alias("mean_raw"),
-            _pround(
+            pround(
                 F.sum(clamped.cast("decimal(38,6)")).cast("double") / n
             ).alias("mean_winsorized"),
             F.sum(
@@ -4896,9 +4789,6 @@ def events_value_winsorized_stats(
 # Round-5 fourteenth wave (SURVEY.md §2.Q, continued): Arrow-optimized
 # Python UDF surface, write-mode semantics matrix, the NOT IN + NULL
 # three-valued-logic trap pinned, and a data-contract rule check.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -5111,9 +5001,6 @@ def quality_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round-trip with embedded delimiters/newlines, pre/post Welch t-test,
 # running-distinct-count windows, and incremental batch dedup against an
 # existing lake.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -5271,9 +5158,9 @@ def events_pre_post_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n1",
         "n2",
-        _pround(m1).alias("mean_pre"),
-        _pround(m2).alias("mean_post"),
-        _pround((m1 - m2) / F.sqrt(se2)).alias("welch_t"),
+        pround(m1).alias("mean_pre"),
+        pround(m2).alias("mean_post"),
+        pround((m1 - m2) / F.sqrt(se2)).alias("welch_t"),
     )
 
 
@@ -5393,9 +5280,6 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 sixteenth wave (SURVEY.md §2.Q, continued): exactly-once
 # batch ledger semantics, stable k-per-group sampling, deterministic
 # content-UUID minting, and session-bounded CEP-style pattern matching.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -5637,9 +5521,6 @@ def events_cep_triple_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph triangle census, whole-file text ingestion, seasonal-naive
 # forecast backtesting, and a top-k-per-group strategy-equivalence
 # proof.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -5733,7 +5614,7 @@ def graph_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_edges",
             "n_wedges",
             F.col("n_tri").alias("n_triangles"),
-            _pround(
+            pround(
                 3.0 * F.col("n_tri") / F.col("n_wedges").cast("double")
             ).alias("global_clustering"),
         )
@@ -5834,8 +5715,8 @@ def events_seasonal_naive_backtest(
     return scored.groupBy("event_type").agg(
         cnt.alias("n_days_scored"),
         F.sum(F.abs(err)).cast("bigint").alias("abs_err_sum"),
-        _pround(F.sum(F.abs(err)).cast("double") / cnt).alias("mae"),
-        _pround(F.sqrt(F.sum(err * err).cast("double") / cnt)).alias("rmse"),
+        pround(F.sum(F.abs(err)).cast("double") / cnt).alias("mae"),
+        pround(F.sqrt(F.sum(err * err).cast("double") / cnt)).alias("rmse"),
         F.sum(err).cast("bigint").alias("bias"),
     )
 
@@ -5934,9 +5815,6 @@ def topk_per_group_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 eighteenth wave (SURVEY.md §2.Q, continued): top session
 # paths, linear multi-touch attribution, conversion-latency quantiles,
 # and a small-files compaction planner.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -6115,7 +5993,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.count(F.lit(1)).over(Window.partitionBy("purchase_id"))
     credited = touches.select(
         "touch_type",
-        _pround(F.lit(1.0) / k, 9).cast("decimal(38,9)").alias("credit"),
+        pround(F.lit(1.0) / k, 9).cast("decimal(38,9)").alias("credit"),
     )
     return credited.groupBy("touch_type").agg(
         F.count(F.lit(1)).alias("n_touches"),
@@ -6184,13 +6062,13 @@ def events_time_to_convert_quantiles(
     )
     return lat.agg(
         F.count(F.lit(1)).alias("n_converted"),
-        _pround(
+        pround(
             F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY minutes)")
         ).alias("p50_minutes"),
-        _pround(
+        pround(
             F.expr("percentile_cont(0.9) WITHIN GROUP (ORDER BY minutes)")
         ).alias("p90_minutes"),
-        _pround(F.max("minutes")).alias("max_minutes"),
+        pround(F.max("minutes")).alias("max_minutes"),
     )
 
 
@@ -6255,9 +6133,6 @@ def pipeline_compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 nineteenth wave (SURVEY.md §2.Q, continued): array set
 # operations, binaryFile ingestion, ISO week/year calendar parity, and
 # an equi-depth (quantile-binned) histogram.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -6465,9 +6340,6 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 twentieth wave (SURVEY.md §2.Q, continued): a declarative
 # alert-rules engine, empty-relation aggregate semantics, the default-
 # window-frame ties pin, and pairwise Jensen-Shannon source drift.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -6533,7 +6405,7 @@ def events_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     err_rate = F.col("n_err").cast("double") / F.col("n")
     r1 = totals.select(
         F.lit("error_rate_gt_19pct").alias("rule"),
-        _pround(err_rate).alias("metric"),
+        pround(err_rate).alias("metric"),
         F.lit(0.19).alias("threshold"),
         F.when(err_rate > 0.19, 1).otherwise(0).cast("int").alias("fired"),
     )
@@ -6547,7 +6419,7 @@ def events_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop = F.col("min_daily") / F.col("mean_daily")
     r2 = ds.select(
         F.lit("daily_volume_drop_gt_50pct").alias("rule"),
-        _pround(drop).alias("metric"),
+        pround(drop).alias("metric"),
         F.lit(0.5).alias("threshold"),
         F.when(drop < 0.5, 1).otherwise(0).cast("int").alias("fired"),
     )
@@ -6562,7 +6434,7 @@ def events_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r3 = p95.select(
         F.lit("value_p95_gt_100").alias("rule"),
-        _pround(F.col("p95")).alias("metric"),
+        pround(F.col("p95")).alias("metric"),
         F.lit(100.0).alias("threshold"),
         F.when(F.col("p95") > 100, 1).otherwise(0).cast("int").alias("fired"),
     )
@@ -6744,7 +6616,7 @@ def text_js_divergence_pairwise(
     ) + 0.5 * F.sum(F.col("pb") * F.log(F.col("pb") / F.col("m")))
     return pairs.groupBy("src1", "src2").agg(
         F.count(F.lit(1)).alias("n_shared_tokens"),
-        _pround(js).alias("js_divergence"),
+        pround(js).alias("js_divergence"),
     )
 
 
@@ -6753,9 +6625,6 @@ def text_js_divergence_pairwise(
 # Round-5 twenty-first wave (SURVEY.md §2.Q, continued): BM25 lexical
 # ranking, inverted-index boolean search, doc⇄embedding coverage audit,
 # and rolling 7-day distinct actives via the explode-offset pattern.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _BM25_TERMS = ["hash", "join", "filter"]
@@ -6864,7 +6733,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in _BM25_TERMS
     ]
     score = per_term[0] + per_term[1] + per_term[2]
-    scored = joined.groupBy("doc_id").agg(_pround(score).alias("score"))
+    scored = joined.groupBy("doc_id").agg(pround(score).alias("score"))
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -6992,7 +6861,7 @@ def multimodal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_vectors",
             "docs_missing_vector",
             "dangling_vectors",
-            _pround(F.col("n_cov") / F.col("n_docs")).alias(
+            pround(F.col("n_cov") / F.col("n_docs")).alias(
                 "coverage_ratio"
             ),
         )
@@ -7063,9 +6932,6 @@ def events_rolling_7d_active_users(
 # inventory classification, maximal-marginal-relevance diversified
 # selection, single-source supplier risk, and a partition-invariance
 # determinism proof.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -7363,7 +7229,7 @@ def part_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tagged.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n_parts"),
         single.cast("bigint").alias("single_sourced"),
-        _pround(single.cast("double") / F.count(F.lit(1))).alias(
+        pround(single.cast("double") / F.count(F.lit(1))).alias(
             "single_source_share"
         ),
     )
@@ -7431,9 +7297,6 @@ def dedup_partition_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 twenty-third wave (SURVEY.md §2.Q, continued): partial-
 # aggregation merge proof, transition dwell-time stats, training-shard
 # manifest build, and median-split quadrant classification.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -7588,7 +7451,7 @@ def events_transition_dwell_stats(
     return seq.groupBy("prev_type", "next_type").agg(
         n.alias("n_transitions"),
         F.sum("dwell_us").cast("bigint").alias("dwell_us_sum"),
-        _pround(F.sum("dwell_us").cast("double") / n / 1_000_000).alias(
+        pround(F.sum("dwell_us").cast("double") / n / 1_000_000).alias(
             "mean_dwell_s"
         ),
         F.expr(
@@ -7737,9 +7600,6 @@ def supplier_quadrant_classification(
 # Round-5 twenty-fourth wave (SURVEY.md §2.Q, continued): vector-index
 # upsert refresh, two-sample Kolmogorov-Smirnov drift test, keyset
 # (seek) pagination, and fiscal-calendar rollups.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -7829,7 +7689,7 @@ def embed_index_upsert_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("n_replaced"),
-        _pround(F.sum(comp_sum)).alias("component_sum"),
+        pround(F.sum(comp_sum)).alias("component_sum"),
     )
 
 
@@ -7922,7 +7782,7 @@ def quality_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         gaps.orderBy(F.desc("gap"), F.asc("value"))
         .limit(1)
         .select(
-            _pround(F.col("gap")).alias("ks_statistic"),
+            pround(F.col("gap")).alias("ks_statistic"),
             F.col("value").alias("ks_location"),
         )
     )
@@ -8051,9 +7911,6 @@ def orders_fiscal_calendar_rollup(
 # Round-5 twenty-fifth wave (SURVEY.md §2.Q, continued): business-day
 # latency arithmetic, min-max feature scaling with invariant checks,
 # readability scoring, and YTD-vs-prior-year alignment.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -8132,8 +7989,8 @@ def fn_business_days_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.count(F.lit(1))
     return lat.groupBy("o_orderpriority").agg(
         n.alias("n"),
-        _pround(F.sum("cal_days").cast("double") / n).alias("mean_cal_days"),
-        _pround(F.sum("bus_days").cast("double") / n).alias("mean_bus_days"),
+        pround(F.sum("cal_days").cast("double") / n).alias("mean_cal_days"),
+        pround(F.sum("bus_days").cast("double") / n).alias("mean_bus_days"),
         F.sum(F.when(F.col("bus_days") > 65, 1).otherwise(0))
         .cast("bigint")
         .alias("n_sla_breach"),
@@ -8194,10 +8051,10 @@ def fn_minmax_scale_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.count(F.lit(1))
     return scaled.groupBy("event_type").agg(
         n.alias("n"),
-        _pround(F.min("s")).alias("scaled_min"),
-        _pround(F.max("s")).alias("scaled_max"),
-        _pround(
-            F.sum(_pround(F.col("s"), 9).cast("decimal(38,9)")).cast("double")
+        pround(F.min("s")).alias("scaled_min"),
+        pround(F.max("s")).alias("scaled_max"),
+        pround(
+            F.sum(pround(F.col("s"), 9).cast("decimal(38,9)")).cast("double")
             / n
         ).alias("scaled_mean"),
     )
@@ -8248,7 +8105,7 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_syll = F.size(
         F.regexp_extract_all(F.col("text"), F.lit("[aeiouy]+"), F.lit(0))
     )
-    grade = _pround(
+    grade = pround(
         0.39 * (n_words.cast("double") / n_sentences)
         + 11.8 * (n_syll.cast("double") / n_words)
         - 15.59
@@ -8260,7 +8117,7 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY grade)").alias(
             "p50_grade"
         ),
-        _pround(
+        pround(
             F.sum(F.col("grade").cast("decimal(38,6)")).cast("double") / n
         ).alias("mean_grade"),
     )
@@ -8324,7 +8181,7 @@ def orders_ytd_vs_prior_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doy",
         F.round("ytd_rev_d", 2).cast("double").alias("prior_ytd_rev"),
     )
-    growth = _pround(
+    growth = pround(
         (F.col("ytd_rev") - F.col("prior_ytd_rev")) / F.col("prior_ytd_rev")
     )
     return (
@@ -8348,9 +8205,6 @@ def orders_ytd_vs_prior_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vocabulary coverage, as-of join direction variants, key-sequence gap
 # auditing via the two-level decomposition, and a snapshot-retention GC
 # planner.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _VOCAB = [
@@ -8390,7 +8244,7 @@ def text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return toks.groupBy("source").agg(
         n.cast("bigint").alias("n_tokens"),
         oov.cast("bigint").alias("n_oov"),
-        _pround(oov.cast("double") / n).alias("oov_rate"),
+        pround(oov.cast("double") / n).alias("oov_rate"),
     )
 
 

@@ -1069,8 +1069,7 @@ def quality_expectation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round7f (round-7 fifty-eighth wave, SURVEY.md §2.R): scalable
 # global row indexing without a single-task window, CDC apply with delete
-# tombstones, and IP/CIDR log-enrichment joins. Registered in
-# catalog._DEFER_TO_NEXT_ROUND so the planned r7 driver window is untouched.
+# tombstones, and IP/CIDR log-enrichment joins.
 # ===========================================================================
 
 from pyspark.sql import Window

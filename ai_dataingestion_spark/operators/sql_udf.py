@@ -20,45 +20,26 @@ session-level registration never collides with user temp objects.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.registry import register_views
-
-
-def _sql_udf_op(name: str, setup: tuple[str, ...], query: str, oracle: str,
-                doc: str):
-    """Register an operator that CREATEs temporary SQL function(s) then runs
-    a query through them; the DuckDB oracle is the hand-inlined form."""
-
-    def _fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        for stmt in setup:
-            spark.sql(stmt)
-        return spark.sql(query)
-
-    _fn.__name__ = name
-    _fn.__doc__ = doc
-    return register(name, oracle=oracle, doc=doc)(_fn)
+from ai_dataingestion_spark.catalog import register_sql
 
 
 # ---------------------------------------------------------------------------
 # sql_udf_scalar_inline — scalar SQL UDF inlined into a pricing aggregate
 # ---------------------------------------------------------------------------
 
-_sql_udf_op(
+register_sql(
     "sql_udf_scalar_inline",
-    setup=(
+    spark_sql=(
         """CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(
              p DOUBLE, d DOUBLE) RETURNS DOUBLE RETURN p * (1 - d)""",
-    ),
-    query="""
+        """
 SELECT l_returnflag AS flag, count(*) AS n,
        coalesce(CAST(round(sum(graft_disc_price(l_extendedprice, l_discount))
                            * 100) AS BIGINT), 0) AS disc_rev_cents
 FROM lineitem
 GROUP BY l_returnflag
 """,
+    ),
     oracle="""
 SELECT l_returnflag AS flag, count(*) AS n,
        coalesce(CAST(round(sum(l_extendedprice * (1 - l_discount))
@@ -80,20 +61,20 @@ GROUP BY l_returnflag
 # sql_udf_table_parameterized — TVF with a threshold parameter
 # ---------------------------------------------------------------------------
 
-_sql_udf_op(
+register_sql(
     "sql_udf_table_parameterized",
-    setup=(
+    spark_sql=(
         """CREATE OR REPLACE TEMPORARY FUNCTION graft_big_orders(
              threshold DOUBLE)
            RETURNS TABLE(o_orderkey BIGINT, o_custkey BIGINT,
                          o_totalprice DOUBLE)
            RETURN SELECT o_orderkey, o_custkey, o_totalprice
                   FROM orders WHERE o_totalprice > threshold""",
-    ),
-    query="""
+        """
 SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice
 FROM graft_big_orders(300000.0)
 """,
+    ),
     oracle="""
 SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice
 FROM orders WHERE o_totalprice > 300000.0
@@ -111,21 +92,21 @@ FROM orders WHERE o_totalprice > 300000.0
 # sql_udf_lateral_correlated — TVF lateral-joined with a per-row argument
 # ---------------------------------------------------------------------------
 
-_sql_udf_op(
+register_sql(
     "sql_udf_lateral_correlated",
-    setup=(
+    spark_sql=(
         """CREATE OR REPLACE TEMPORARY FUNCTION graft_nations_of(rk INT)
            RETURNS TABLE(n_nationkey INT, n_name STRING)
            RETURN SELECT n_nationkey, n_name FROM nation
                   WHERE n_regionkey = rk""",
-    ),
-    query="""
+        """
 SELECT r.r_name AS region_name,
        CAST(count(*) AS BIGINT) AS n_nations,
        min(n.n_name) AS first_nation
 FROM region r, LATERAL graft_nations_of(r.r_regionkey) n
 GROUP BY r.r_name
 """,
+    ),
     oracle="""
 SELECT r.r_name AS region_name,
        CAST(count(*) AS BIGINT) AS n_nations,
@@ -146,9 +127,9 @@ GROUP BY r.r_name
 # sql_udf_default_composed — DEFAULT parameters + UDF-composes-UDF
 # ---------------------------------------------------------------------------
 
-_sql_udf_op(
+register_sql(
     "sql_udf_default_composed",
-    setup=(
+    spark_sql=(
         """CREATE OR REPLACE TEMPORARY FUNCTION graft_uplift(
              x DOUBLE, pct DOUBLE DEFAULT 0.05)
            RETURNS DOUBLE RETURN x * (1 + pct)""",
@@ -158,8 +139,7 @@ _sql_udf_op(
                        WHEN x < 50000 THEN 'lo'
                        WHEN x < 200000 THEN 'mid'
                        ELSE 'hi' END""",
-    ),
-    query="""
+        """
 SELECT graft_price_band(graft_uplift(o_totalprice)) AS band_default,
        graft_price_band(graft_uplift(o_totalprice, 0.5)) AS band_boosted,
        count(*) AS n
@@ -167,6 +147,7 @@ FROM orders
 GROUP BY graft_price_band(graft_uplift(o_totalprice)),
          graft_price_band(graft_uplift(o_totalprice, 0.5))
 """,
+    ),
     oracle="""
 WITH b AS (
   SELECT CASE WHEN o_totalprice IS NULL THEN 'unknown'

@@ -43,10 +43,7 @@ props k in [0, 99]. A future tier that injects negative k stays green.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.registry import register_views
+from ai_dataingestion_spark.catalog import register_sql
 
 # Spark-side shred of the admissible domain: ONE try_parse_json of props
 # per row (NULL variant for malformed/dup-key docs), '$.k' as bigint.
@@ -69,17 +66,7 @@ _GATE = """
 """
 
 
-def _sql_op(name: str, spark_sql: str, oracle: str, doc: str):
-    def _fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(spark_sql)
-
-    _fn.__name__ = name
-    _fn.__doc__ = doc
-    return register(name, oracle=oracle, doc=doc)(_fn)
-
-
-_sql_op(
+register_sql(
     "fn_variant_explode_array",
     spark_sql=f"""
 WITH adm AS ({_SHRED}), e AS (SELECT k FROM adm WHERE k IS NOT NULL)
@@ -107,7 +94,7 @@ GROUP BY pos
 )
 
 
-_sql_op(
+register_sql(
     "fn_variant_object_explode",
     spark_sql=f"""
 WITH adm AS ({_SHRED}), e AS (SELECT k FROM adm WHERE k IS NOT NULL),
@@ -140,7 +127,7 @@ SELECT key, count(*) AS n, CAST(sum(val) AS BIGINT) AS sum_val FROM (
 )
 
 
-_sql_op(
+register_sql(
     "fn_variant_typed_coercion",
     spark_sql=f"""
 WITH adm AS ({_SHRED}), e AS (SELECT event_type, k FROM adm
@@ -179,7 +166,7 @@ FROM e GROUP BY event_type
 )
 
 
-_sql_op(
+register_sql(
     "fn_variant_to_struct_shred",
     spark_sql=f"""
 WITH adm AS ({_SHRED}), e AS (SELECT k FROM adm WHERE k IS NOT NULL),
@@ -205,7 +192,7 @@ FROM e GROUP BY lab
 )
 
 
-_sql_op(
+register_sql(
     "fn_variant_schema_inventory",
     spark_sql=f"""
 WITH adm AS ({_SHRED}), e AS (SELECT k FROM adm WHERE k IS NOT NULL),

@@ -5,7 +5,8 @@ Usage:
     python scripts/rotation_plan.py --write   # regenerate recert_order.json
 
 The driver hash-checks only the FIRST 50 entries of queries() per round, so
-registration order is the coverage rotation knob (catalog._rotation_rank).
+registration order is the coverage rotation knob (catalog._rotation_rank,
+which reads the attested set from the packaged recert_order.json).
 catalog.py's prose comments drifted twice (ADVICE-r7 item 4, VERDICT-r8
 "What's wrong" 1) when these numbers were hand-maintained; this script is the
 single source of truth. It derives the plan from the live registry plus the
@@ -15,8 +16,8 @@ CORRECTNESS_r*.json evidence files and prints:
   - the pending backlog (IDs with no driver row yet), split by rotation rank,
   - the exact 50-ID window the driver will sweep next round,
   - how many further windows the remaining tail needs,
-  - any DISAGREEMENT between _DRIVER_CHECKED and the CORRECTNESS files
-    (an ID green in a file but not folded, or folded without a green row).
+  - any DISAGREEMENT between the packaged recert_order.json and the
+    CORRECTNESS files (a stale table, or an ID the registry no longer has).
 
 Round 11 (VERDICT-r10 item 1): with the backlog at 0, the window flips to
 STALENESS-ORDERED RE-CERTIFICATION — attested-green IDs are swept oldest
@@ -122,7 +123,6 @@ def main(argv: list[str]) -> int:
         return 0
 
     from ai_dataingestion_spark.catalog import (
-        _DRIVER_CHECKED,
         _latest_green_round,
         _rotation_rank,
         all_specs,
@@ -131,9 +131,7 @@ def main(argv: list[str]) -> int:
     specs = all_specs()
     names = list(specs)
     greens = correctness_greens()
-    # Pending = no green file evidence (VERDICT-r9 item 4) — NOT "not yet
-    # folded into _DRIVER_CHECKED"; folding lag is reported separately by
-    # the consistency audit below.
+    # Pending = no green file evidence (VERDICT-r9 item 4).
     pending = [n for n in names if n not in greens]
     window = names[:50]
     windows_left = -(-len(pending) // 50)  # ceil
@@ -141,27 +139,28 @@ def main(argv: list[str]) -> int:
     latest_files = latest_green_round()
     latest_packaged = _latest_green_round()
 
+    def rank(n: str) -> int:
+        return _rotation_rank(specs[n], latest_packaged)
+
     print(f"registered operators : {len(names)}")
     print(f"attested green (files): {len(set(greens) & set(names))}")
-    print(f"_DRIVER_CHECKED size : {len(_DRIVER_CHECKED)}")
     print(f"pending backlog      : {len(pending)}  (~{windows_left} window(s) at 50/round)")
     by_rank: dict[int, int] = {}
     for n in pending:
-        by_rank[_rotation_rank(specs[n])] = by_rank.get(_rotation_rank(specs[n]), 0) + 1
+        by_rank[rank(n)] = by_rank.get(rank(n), 0) + 1
     print(f"pending by rank      : {dict(sorted(by_rank.items()))}")
     print("\nnext driver window (first 50 of queries()):")
     for i, n in enumerate(window):
-        # "pending" means NO green file evidence exists (VERDICT-r9 item 4):
-        # an ID whose green row landed but isn't folded into _DRIVER_CHECKED
-        # yet is labeled distinctly so the plan never contradicts evidence.
+        # "pending" means NO green file evidence exists (VERDICT-r9 item 4);
+        # a green row the packaged table has not picked up yet is labeled
+        # distinctly (the STALE-TABLE audit below names the fix).
         if n in greens:
-            rank = _rotation_rank(specs[n])
-            if rank >= 4:
+            if rank(n) >= 4:
                 tag = f"re-certify(last green r{latest_files.get(n, 0)})"
-            elif rank == 1:
+            elif rank(n) == 1:
                 tag = f"re-check(stale contract, last green r{latest_files.get(n, 0)})"
             else:
-                tag = "green-unfolded"
+                tag = "green-not-in-table"
         else:
             tag = "pending"
         print(f"  {i + 1:2d}. {n}  [{tag}]")
@@ -170,16 +169,7 @@ def main(argv: list[str]) -> int:
         for n in pending[50:] if pending[:50] == window else [p for p in pending if p not in window]:
             print(f"  - {n}")
 
-    # Consistency audit: the evidence ledgers must agree.
     problems = []
-    for qid, src in sorted(greens.items()):
-        if qid in specs and qid not in _DRIVER_CHECKED:
-            problems.append(f"UNFOLDED: {qid} green in {src} but not in _DRIVER_CHECKED")
-    for qid in sorted(_DRIVER_CHECKED):
-        if qid not in greens:
-            problems.append(f"UNATTESTED: {qid} in _DRIVER_CHECKED but no green CORRECTNESS row")
-        if qid not in specs:
-            problems.append(f"UNREGISTERED: {qid} in _DRIVER_CHECKED but not in the registry")
     # Ledger audit (VERDICT-r14 item 4 — SURVEY.md:1333 drifted by one when
     # the prose sum was hand-maintained): every PROSE operator count must
     # equal the live registry. Checked: README's "**N registered operators**"
@@ -217,13 +207,16 @@ def main(argv: list[str]) -> int:
                 f"r{latest_packaged.get(qid)} but files say r{latest_files[qid]} "
                 "(run: python scripts/rotation_plan.py --write)"
             )
+    for qid in sorted(set(latest_packaged) - set(specs)):
+        problems.append(
+            f"UNREGISTERED: {qid} in recert_order.json but not in the registry"
+        )
     if problems:
         print("\nBOOKKEEPING DISAGREEMENTS:")
         for p in problems:
             print(f"  {p}")
         return 1
-    print("\nbookkeeping consistent: _DRIVER_CHECKED == CORRECTNESS greens"
-          " == recert_order.json")
+    print("\nbookkeeping consistent: CORRECTNESS greens == recert_order.json")
     return 0
 
 

@@ -67,43 +67,46 @@ def test_driver_window_rotation():
     (rank < 4) lands inside the 50-slot window while such IDs fit (so no
     pending evidence is stranded behind attested-green entries); and any
     attested-green entry in the window appears only after all pending ones.
+    The attested set is derived from the packaged recert_order.json.
     """
     from ai_dataingestion_spark.catalog import (
-        _DRIVER_CHECKED,
         _EVENTS_RECHECK,
+        _latest_green_round,
         _rotation_rank,
     )
 
+    latest = _latest_green_round()
     names = list(SPECS)
     assert len(names) == TOTAL_OPERATORS
-    ranks = [_rotation_rank(SPECS[n]) for n in names]
+    ranks = [_rotation_rank(SPECS[n], latest) for n in names]
     assert ranks == sorted(ranks)
 
     window = names[:50]
-    pending = [n for n in names if _rotation_rank(SPECS[n]) < 4]
+    pending = [n for n in names if _rotation_rank(SPECS[n], latest) < 4]
     if len(pending) <= 50:
         assert set(pending) <= set(window), "pending ID stranded outside window"
     else:
-        assert all(_rotation_rank(SPECS[n]) < 4 for n in window)
+        assert all(_rotation_rank(SPECS[n], latest) < 4 for n in window)
     # every re-check ID must be oracle-backed, else re-checking is pointless
     for n in _EVENTS_RECHECK:
         assert SPECS[n].oracle is not None, f"{n} recheck without oracle"
     # green entries only fill window slots left over after pending ones
     for n in window:
-        if n in _DRIVER_CHECKED and n not in _EVENTS_RECHECK:
+        if n in latest and n not in _EVENTS_RECHECK:
             assert len(pending) < 50
-    # Backlog bookkeeping pin (ADVICE r7 item 4): the hand-maintained
-    # rotation comments plan driver windows from this count — assert it so
-    # an off-by-one in _DRIVER_CHECKED / _DEFER_TO_NEXT_ROUND maintenance is
-    # caught by pytest, not by a mis-planned window. Update alongside
-    # TOTAL_OPERATORS each round: backlog = total - attested-green.
+    # Backlog bookkeeping pin (ADVICE r7 item 4): sweep windows are planned
+    # from this count — assert it so a registration that never reached
+    # recert_order.json is caught by pytest, not by a mis-planned window.
+    # Update alongside TOTAL_OPERATORS each round: backlog = total -
+    # attested-green.
     EXPECTED_BACKLOG = 0  # r16 block's 11 IDs went green in CORRECTNESS_r16 and are folded; no new operators this optimization round (rank-1 entries are re-checks, not backlog)
     # _EVENTS_RECHECK members rank <4 to claim window slots, but they HAVE
     # driver evidence (it's merely stale) — they are re-checks, not backlog.
     first_time = [n for n in pending if n not in _EVENTS_RECHECK]
     assert len(first_time) == EXPECTED_BACKLOG, (
         f"rotation backlog {len(first_time)} != planned {EXPECTED_BACKLOG}; "
-        "update _DRIVER_CHECKED (fold the new CORRECTNESS greens) and this pin"
+        "regenerate recert_order.json (python scripts/rotation_plan.py "
+        "--write) and update this pin"
     )
 
 
@@ -112,7 +115,7 @@ def test_recertification_window_is_staleness_ordered():
     attested-green tail is ordered oldest-latest-evidence first, from the
     packaged recert_order.json (regenerated each round by
     `scripts/rotation_plan.py --write`). Pins: (a) the table exists and
-    covers every registered ID, (b) oracle-backed rank-4 entries are
+    names only registered IDs, (b) oracle-backed rank-4 entries are
     non-decreasing in latest-green round, (c) rows-only IDs never precede
     oracle-backed ones inside rank 4 (their driver check is weakest)."""
     from ai_dataingestion_spark.catalog import (
@@ -123,10 +126,10 @@ def test_recertification_window_is_staleness_ordered():
     latest = _latest_green_round()
     assert latest, "recert_order.json missing or empty"
     names = list(SPECS)
-    missing = [n for n in names if n not in latest and _rotation_rank(SPECS[n]) >= 4]
-    assert not missing, f"attested IDs missing from recert_order.json: {missing[:5]}"
+    unregistered = sorted(set(latest) - set(names))
+    assert not unregistered, f"recert_order.json IDs not registered: {unregistered[:5]}"
 
-    rank4 = [n for n in names if _rotation_rank(SPECS[n]) >= 4]
+    rank4 = [n for n in names if _rotation_rank(SPECS[n], latest) >= 4]
     oracle_tail = [n for n in rank4 if SPECS[n].oracle is not None]
     rounds = [latest[n] for n in oracle_tail]
     assert rounds == sorted(rounds), "oracle-backed recert tail not staleness-ordered"

@@ -7,7 +7,9 @@ semantics the slower form had, so a future refactor cannot silently drift:
   same pair set as the per-group applyInPandas it replaced, including when a
   block straddles an Arrow batch boundary;
 - the string-expression minhash builders must produce the same signature
-  values as the Column-arithmetic forms they replaced.
+  values as the Column-arithmetic forms they replaced;
+- the shared MinHash-LSH kernel's 8×4 banding must count the same candidate
+  pairs as dedup_lsh_band_tuning's fused (8, 4) configuration.
 """
 
 from __future__ import annotations
@@ -338,3 +340,33 @@ def test_band_tuning_threshold_literals_are_doubles(spark, sf_small):
     field = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert field["threshold_50"] == "double"
     assert field["n_candidate_pairs"] == "bigint"
+
+
+def test_minhash_kernel_candidates_match_band_tuning_8x4(spark, sf_small):
+    """Two spellings of one banding family: the kernel's 8×4 candidate
+    pairs (minhash_candidates — what dedup_near_minhash,
+    dedup_eval_precision_recall and dedup_removal_plan verify) and
+    dedup_lsh_band_tuning's fused (8, 4) configuration must count the same
+    distinct pairs, else the two bandings have diverged."""
+    from ai_dataingestion_spark.ai.dedup import (
+        N_BANDS,
+        ROWS_PER_BAND,
+        _corpus_with_near_dups,
+        minhash_candidates,
+        minhash_shingles,
+        minhash_signature,
+    )
+    from ai_dataingestion_spark.catalog import all_specs
+    from ai_dataingestion_spark.opcache import release_op_caches
+
+    tuned = {
+        (r["bands"], r["rows_per_band"]): r["n_candidate_pairs"]
+        for r in all_specs()["dedup_lsh_band_tuning"].fn(spark, sf_small).collect()
+    }
+    try:
+        docs = minhash_shingles(_corpus_with_near_dups(spark, sf_small))
+        n_kernel = minhash_candidates(minhash_signature(docs), sf_small).count()
+    finally:
+        release_op_caches()
+    assert n_kernel > 0, "fixture produced no candidates — test is vacuous"
+    assert tuned[(N_BANDS, ROWS_PER_BAND)] == n_kernel
