@@ -9,6 +9,13 @@ Scale posture: every near-dup algorithm here is candidate-generation via a
 key-equality join (LSH band bucket / simhash chunk / rare shingle) followed
 by exact verification on the candidate pairs only. Nothing is O(n²) over the
 corpus; the shuffles are on bucket keys.
+
+This module is also the near-dup kernel every shingle-set operator calls,
+one function per stage: ``shingle_sets`` (the op_cached 3-token shingle
+sets), ``minhash_signature``/``minhash_candidates`` (Carter-Wegman
+signatures, 8×4 banding), ``rare_shingle_pairs`` (DF-capped rare-shingle
+index → per-pair common-shingle counts) and ``shingle_pair_sides`` (the
+verify join that attaches both shingle sets to candidate pairs).
 """
 
 from __future__ import annotations
@@ -33,6 +40,10 @@ N_BANDS = 8
 ROWS_PER_BAND = 4
 
 _DUP_OFFSET = 1_000_000
+
+# Absolute document-frequency cap of the rare-shingle index (see
+# dedup_ngram_jaccard's recall contract for why it is not corpus-relative).
+RARE_SHINGLE_CAP = 50
 
 
 def _corpus_with_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,45 +104,36 @@ def _duck_h(s: str) -> str:
     return f"CAST('0x'||substring(md5({s}),1,15) AS BIGINT)"
 
 
+# Documents-parquet bytes under which _rare_shingle_index may statically
+# broadcast its hot-hash/rescued relations: at 256 MiB of documents their
+# size bound (shingle_rows / cap) is ~1M hashes / ~8 MB.
 _SMALL_CORPUS_BYTES = 256 * 1024 * 1024
 
 
-def _small_corpus(sf_dir: str, table: str = "documents") -> bool:
-    """O(1) driver-side size gate: True iff the table's parquet bytes on a
-    LOCAL path are provably under _SMALL_CORPUS_BYTES (delegates to the
-    shared scale.table_bytes_under; non-local paths and stat failures fail
-    closed). Used to decide whether the hot-hash/rescued relations
-    (cardinality <= shingle_rows / cap, i.e. linear in the corpus) may be
-    statically broadcast: at 256 MiB of documents that bound is ~1M hashes /
-    ~8 MB — comfortably broadcastable — while at lake scale the gate fails
-    closed and AQE's runtime size check decides (ADVICE r4)."""
-    return table_bytes_under(sf_dir, table, _SMALL_CORPUS_BYTES)
-
-
-def _rare_shingle_index(
-    inv: DataFrame, cap: int = 50, small_corpus: bool = False
-) -> DataFrame:
+def _rare_shingle_index(inv: DataFrame, sf_dir: str) -> DataFrame:
     """(doc_id, h) rows of shingles whose STRING-level document frequency
-    is <= cap, computed from 8-byte hash keys: hash-count <= cap implies
-    every underlying string is rare (hash count >= string DF), so those
-    rows enter with no string work; only HOT hashes (count > cap — the
-    Zipf head) are re-counted at string level, and strings that prove rare
-    are rescued, so a 64-bit collision can never silently drop a rare
-    shingle. `inv` must have (doc_id, sh, h) columns. Shared by
-    dedup_ngram_jaccard and text_containment_pairs; its equivalence to a
+    is <= cap (RARE_SHINGLE_CAP), computed from 8-byte hash keys:
+    hash-count <= cap implies every underlying string is rare (hash count
+    >= string DF), so those rows enter with no string work; only HOT
+    hashes (count > cap — the Zipf head) are re-counted at string level,
+    and strings that prove rare are rescued, so a 64-bit collision can
+    never silently drop a rare shingle. `inv` must have (doc_id, sh, h)
+    columns. The index stage of rare_shingle_pairs; its equivalence to a
     pure string-level DF cap is proven on the real corpus in
     tests/test_plans.py::test_rescue_path_matches_string_level_cap.
 
     Join strategy (ADVICE r4): hot_h/rescued cardinality is bounded by
     total_rows / cap — small at bench scale but LINEAR in the corpus
     (~2e10 entries at 1e12 shingle rows), so an UNCONDITIONAL F.broadcast
-    hint is not scale-safe. Instead the caller passes ``small_corpus``
-    (the O(1) parquet-bytes gate in _small_corpus): when the corpus is
-    provably tiny the hint is applied — without it, the tuned bench
-    config (AQE off) sort-merges these joins and dedup_ngram_jaccard
-    regressed 2.79 s -> 5.89 s at sf0.1 — and at lake scale the gate
-    fails closed, leaving the production config (AQE on, session.py) to
-    measure the built side at runtime and broadcast iff actually small.
+    hint is not scale-safe. Instead an O(1) driver-side gate decides:
+    documents parquet bytes on a LOCAL ``sf_dir`` provably under
+    _SMALL_CORPUS_BYTES (scale.table_bytes_under). When the corpus is
+    provably tiny the hint is applied — without it, the tuned bench config
+    (AQE off) sort-merges these joins and dedup_ngram_jaccard regressed
+    2.79 s -> 5.89 s at sf0.1 — and at lake scale, on non-local paths or
+    on a stat failure the gate fails closed, leaving the production config
+    (AQE on, session.py) to measure the built side at runtime and
+    broadcast iff actually small.
 
     Residual collision semantics: a rescued-index JOIN on h can count two
     DIFFERENT strings sharing a 64-bit hash as one common shingle, so the
@@ -143,6 +145,8 @@ def _rare_shingle_index(
     requiring a same-hash different-string collision between two docs'
     shingle sets (p ~ 2^-64 per pair; zero observed, would surface as a
     driver hash mismatch)."""
+    cap = RARE_SHINGLE_CAP
+    small_corpus = table_bytes_under(sf_dir, "documents", _SMALL_CORPUS_BYTES)
     hash_df = inv.groupBy("h").agg(F.count(F.lit(1)).alias("hcnt"))
     rare_h = hash_df.filter(F.col("hcnt") <= cap).select("h")
     hot_h = hash_df.filter(F.col("hcnt") > cap).select("h")
@@ -238,23 +242,26 @@ def _cw_sig_agg_exprs() -> list:
 
 
 # ---------------------------------------------------------------------------
-# The MinHash-LSH kernel, one stage per function, shared by every MinHash
-# operator (dedup_near_minhash, dedup_eval_precision_recall,
-# dedup_minhash_estimate_error, dedup_lsh_band_tuning, dedup_removal_plan).
-# Each stage is one parsed SQL string (optimization r17): the per-term
-# Column loops (32 CW aggregates, 8 band structs) cost ~0.5 s of py4j
-# round trips + eager per-step re-analysis per invocation. Caching the
-# signature and the exact-Jaccard verify join stay with the callers, whose
-# plans differ there.
+# The near-dup kernel, one stage per function, shared by every shingle-set
+# operator: the MinHash operators (dedup_near_minhash,
+# dedup_eval_precision_recall, dedup_minhash_estimate_error,
+# dedup_lsh_band_tuning, dedup_removal_plan), the rare-shingle operators
+# (dedup_ngram_jaccard, text_containment_pairs) and the DF-spectrum
+# operators (text_shingle_df_spectrum, text_shingle_df_cap_loss).
+# Each MinHash stage is one parsed SQL string (optimization r17): the
+# per-term Column loops (32 CW aggregates, 8 band structs) cost ~0.5 s of
+# py4j round trips + eager per-step re-analysis per invocation. Caching the
+# signature, the size prefilters and the similarity expression stay with
+# the callers, whose plans differ there.
 # ---------------------------------------------------------------------------
 
 
-def minhash_shingles(corpus: DataFrame) -> DataFrame:
+def shingle_sets(corpus: DataFrame) -> DataFrame:
     """(doc_id, shingles) of a (doc_id, text) corpus, op_cached: exploding a
     generator whose input is the shingle transform over the corpus UNION
     re-evaluates the tokenization pathologically (measured 60+ s/pass vs
     0.3 s from cache on the extremes tier's giant docs, round 10), and the
-    same relation feeds the callers' exact-Jaccard verify."""
+    same relation feeds the callers' candidate stage and exact verify."""
     return (
         corpus.withColumn("toks", F.split("text", " "))
         .selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
@@ -263,7 +270,7 @@ def minhash_shingles(corpus: DataFrame) -> DataFrame:
 
 
 def minhash_signature(docs: DataFrame) -> DataFrame:
-    """(doc_id, h0..h{N_HASHES-1}) from minhash_shingles output: ONE
+    """(doc_id, h0..h{N_HASHES-1}) from shingle_sets output: ONE
     portable md5-derived base hash per shingle, then the Carter-Wegman
     minimums — one shuffle, on doc_id."""
     return (
@@ -289,6 +296,65 @@ def minhash_candidates(sig: DataFrame, sf_dir: str) -> DataFrame:
         banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
         gate=ARRAY_TABLE_BYTES,
     ).distinct()
+
+
+def rare_shingle_pairs(
+    docs: DataFrame,
+    sf_dir: str,
+    *,
+    out: tuple[str, str] = ("id1", "id2"),
+    ordered: bool = True,
+) -> DataFrame:
+    """(out[0], out[1], n_common) for doc pairs sharing >= 1 rare shingle
+    (string DF <= RARE_SHINGLE_CAP — the skew guard: hot shingles would
+    otherwise blow the self-join up quadratically), from shingle_sets
+    output. The index/self-join phase runs on xxhash64(shingle) — 8-byte
+    shuffle keys instead of ~30-byte shingle strings through the widest
+    joins — and _rare_shingle_index keeps the DF cap string-exact (the
+    oracles' definition) by re-counting only the hot-hash sliver.
+    n_common is the integer the callers' size prefilters compare against
+    shingle-set sizes, so most raw candidates die before any array work.
+    ``out``/``ordered`` pass straight to bounded_self_join: ordered pairs
+    (a < b) for symmetric similarity, both directions for containment."""
+    inv = docs.select("doc_id", F.explode("shingles").alias("sh")).select(
+        "doc_id", "sh", F.xxhash64("sh").alias("h")
+    )
+    rare = _rare_shingle_index(inv, sf_dir)
+    return (
+        bounded_self_join(
+            rare, ["h"], "doc_id", sf_dir, "documents",
+            gate=ARRAY_TABLE_BYTES, out=out, ordered=ordered,
+        )
+        .groupBy(*out)
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def shingle_pair_sides(
+    pairs: DataFrame,
+    docs: DataFrame,
+    sf_dir: str,
+    ids: tuple[str, str] = ("id1", "id2"),
+    hint=hint_array_side,
+) -> DataFrame:
+    """The verify join: ``pairs`` with both docs' shingle sets attached as
+    sh1 (keyed on ids[0]) and sh2 (ids[1]), from shingle_sets output. The
+    shingle-ARRAY sides are never estimator-driven — Catalyst sizes a
+    narrow projection of the cached relation and under-counts the arrays
+    (measured at 10x sf0.1: a driver-OOM broadcast build) — so each side
+    goes through ``hint`` (scale.py) at the 1 MiB array-table gate:
+    hint_array_side (shuffle-hash while documents is provably tiny,
+    spillable sort-merge after) or hint_merge_if_large (estimator-driven
+    below the gate, sort-merge above). The two plan differently at sf0.1,
+    so the hint stays the caller's choice."""
+    for id_col, sh_col in zip(ids, ("sh1", "sh2")):
+        side = docs.select(
+            F.col("doc_id").alias(id_col), F.col("shingles").alias(sh_col)
+        )
+        pairs = pairs.join(
+            hint(side, sf_dir, "documents", ARRAY_TABLE_BYTES), id_col
+        )
+    return pairs
 
 
 def _simhash_vote_agg_exprs() -> list:
@@ -386,20 +452,12 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are groupBy(doc_id) for signatures and the (band, bucket)
     equality join — candidate verification touches candidate pairs only.
     """
-    docs = minhash_shingles(_corpus_with_near_dups(spark, sf_dir))
+    docs = shingle_sets(_corpus_with_near_dups(spark, sf_dir))
     cand = minhash_candidates(minhash_signature(docs), sf_dir)
-
-    sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
     union = F.size(F.array_union("sh1", "sh2")).cast("double")
-    # hint_array_side: the CACHED shingle relation's narrow-projection
-    # stats under-count the arrays, so Catalyst would broadcast it and
-    # OOM the driver at 10x (the documented scale.py failure mode —
-    # surfaced here by the round-10 op_cache)
     return (
-        cand.join(hint_array_side(sh1, sf_dir, "documents"), "id1")
-        .join(hint_array_side(sh2, sf_dir, "documents"), "id2")
+        shingle_pair_sides(cand, docs, sf_dir)
         .withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= 0.6)
         .select("id1", "id2", "jaccard")
@@ -549,7 +607,7 @@ shingled AS MATERIALIZED (
   FROM corpus
 ),
 inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shingled),
-df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= 50),
+df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= {RARE_SHINGLE_CAP}),
 rare AS (SELECT inv.doc_id, inv.shingle FROM inv JOIN df USING (shingle)),
 cand AS (
   SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
@@ -597,44 +655,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_removal_plan's staged exact->near composition), which collapses
     identical copies and restores shingle rarity before this op runs.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    # op_cache: the shingled relation feeds the index AND both exact-verify
-    # sides; uncached, each pass re-runs the shingle transform over the
-    # corpus union (60+ s/pass on extremes-tier giant docs, round 10)
-    docs = corpus.select(
-        "doc_id", F.expr(_SHINGLES_EXPR).alias("shingles")
-    ).transform(op_cache)
-    # The index/self-join phase runs on xxhash64(shingle) — 8-byte shuffle
-    # keys instead of ~30-byte shingle strings through the widest joins.
-    # DF-cap semantics must match the oracle's STRING-level cap, but a
-    # string-keyed groupBy over every shingle row was the measured r3
-    # regression (+21%). Observation: hash_count(h) >= string_DF(s) for
-    # every s hashing to h, so a hash whose TOTAL count is <= 50 can only
-    # contain truly-rare strings — those rows enter the index with no
-    # string work at all. Only HOT hashes (count > 50, a handful of
-    # distinct values) can hide a rare string behind a collision with a
-    # hot string (ADVICE r2), so only their rows — a broadcast-pruned
-    # sliver of the corpus — are re-counted at string level, and strings
-    # that prove rare are rescued into the index. Net: the wide shuffles
-    # all carry 8-byte keys; the string aggregate runs on the hot sliver
-    # only (empty of rescues unless a 64-bit collision actually lands).
-    shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    inv = shingle_rows.select(
-        "doc_id", "sh", F.xxhash64("sh").alias("h")
-    )
-    rare = _rare_shingle_index(inv, cap=50, small_corpus=_small_corpus(sf_dir))
-    # count common rare shingles per pair; 3*I >= |A|+|B| is EXACTLY
-    # J >= 0.5 when the DF cap doesn't bite, so almost all of the ~1.6M raw
-    # candidate pairs die on integer counts before any array work
-    cand = (
-        bounded_self_join(
-            rare, ["h"], "doc_id", sf_dir, "documents", gate=ARRAY_TABLE_BYTES
-        )
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    # shingle_sets' op_cache: the shingled relation feeds the index, the
+    # sizes AND both exact-verify sides
+    docs = shingle_sets(_corpus_with_near_dups(spark, sf_dir))
+    # 3*I >= |A|+|B| is EXACTLY J >= 0.5 when the DF cap doesn't bite, so
+    # almost all of the ~1.6M raw candidate pairs die on integer counts
+    # before any array work
+    cand = rare_shingle_pairs(docs, sf_dir)
     # prefilter on per-doc shingle COUNTS (ints) first; full shingle arrays
     # are attached only to the surviving ~0.1% of candidate pairs
     sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
@@ -646,18 +673,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(3 * F.col("n_common") >= F.col("sz1") + F.col("sz2"))
         .select("id1", "id2")
     )
-    # hint_array_side (scale.py): the shingle-ARRAY relation must never be
-    # estimator-driven — Catalyst sizes a narrow projection of the cached
-    # table and under-counts the arrays (measured at 10x sf0.1: a
-    # driver-OOM broadcast build). Shuffle-hash while documents is provably
-    # tiny (bench plan unchanged), spillable sort-merge once it is not
-    # (SHJ builds can't spill — the sfx1.0 can't-acquire class).
-    s1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    s2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    survivors = (
-        prefiltered.join(hint_array_side(s1, sf_dir, "documents"), "id1")
-        .join(hint_array_side(s2, sf_dir, "documents"), "id2")
-    )
+    survivors = shingle_pair_sides(prefiltered, docs, sf_dir)
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
     union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
     return (
@@ -765,7 +781,7 @@ shingled AS MATERIALIZED (
   FROM corpus
 ),
 inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shingled),
-df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= 50),
+df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= {RARE_SHINGLE_CAP}),
 rare AS (SELECT inv.doc_id, inv.shingle FROM inv JOIN df USING (shingle)),
 cand AS (
   SELECT a.doc_id AS small_id, b.doc_id AS big_id, count(*) AS n_common
@@ -815,39 +831,22 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         ).alias("text"),
     )
-    corpus = d.unionByName(truncated).withColumn("toks", F.split("text", " "))
-    # op_cache: docs feeds the index, sizes, and both verify sides — and
-    # the uncached shingle-over-union explode is pathological on giant
-    # docs (extremes tier, round 10)
-    docs = corpus.select(
-        "doc_id", F.expr(_SHINGLES_EXPR).alias("shingles")
-    ).transform(op_cache)
-    shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    inv = shingle_rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
-    rare = _rare_shingle_index(inv, cap=50, small_corpus=_small_corpus(sf_dir))
+    docs = shingle_sets(d.unionByName(truncated))
     # ordered=False: containment roles are asymmetric (small-in-big), so
     # both pair directions are emitted and the containment filter decides
-    cand = (
-        bounded_self_join(
-            rare, ["h"], "doc_id", sf_dir, "documents",
-            gate=ARRAY_TABLE_BYTES, out=("small_id", "big_id"), ordered=False,
-        )
-        .groupBy("small_id", "big_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    cand = rare_shingle_pairs(
+        docs, sf_dir, out=("small_id", "big_id"), ordered=False
     )
     sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
     prefiltered = cand.join(
         sizes.select(F.col("doc_id").alias("small_id"), F.col("sz").alias("sz1")),
         "small_id",
     ).filter(10 * F.col("n_common") >= 8 * F.col("sz1")).select("small_id", "big_id")
-    s1 = docs.select(F.col("doc_id").alias("small_id"), F.col("shingles").alias("sh1"))
-    s2 = docs.select(F.col("doc_id").alias("big_id"), F.col("shingles").alias("sh2"))
     containment = (
         F.size(F.array_intersect("sh1", "sh2")).cast("double") / F.size("sh1")
     )
     return (
-        prefiltered.join(hint_array_side(s1, sf_dir, "documents"), "small_id")
-        .join(hint_array_side(s2, sf_dir, "documents"), "big_id")
+        shingle_pair_sides(prefiltered, docs, sf_dir, ids=("small_id", "big_id"))
         .withColumn("containment", containment)
         .filter(F.col("containment") >= 0.8)
         .select("small_id", "big_id", "containment")

@@ -50,15 +50,6 @@ def _vectors(e):
     return e.where(finite_vec("embedding"))
 
 
-def _dot(a, b):
-    """Σ a_i * b_i with double widening, left-to-right."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _norm(a):
     return F.sqrt(
         F.aggregate(

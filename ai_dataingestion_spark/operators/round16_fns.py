@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ai_dataingestion_spark.ai.dedup import RARE_SHINGLE_CAP, shingle_sets
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     stable_rounded_sum,
@@ -617,7 +618,6 @@ def fn_aes_roundtrip_property(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_shingle_df_cap_loss — the DF-cap recall boundary, measured in-band
 # ---------------------------------------------------------------------------
 
-_CAP = 50  # must equal ai/dedup.py's rare-shingle cap
 _FACTORS = (1, 2, 5, 10, 25, 50)
 
 
@@ -646,16 +646,16 @@ factors AS (SELECT unnest([{", ".join(str(f) for f in _FACTORS)}]) AS k),
 sh_curve AS (
   SELECT f.k,
          sum(s.n_sh) AS n_shingles,
-         sum(CASE WHEN s.d * f.k > {_CAP} THEN s.n_sh ELSE 0 END) AS n_capped,
+         sum(CASE WHEN s.d * f.k > {RARE_SHINGLE_CAP} THEN s.n_sh ELSE 0 END) AS n_capped,
          sum(s.d * s.n_sh) AS inst_total,
-         sum(CASE WHEN s.d * f.k > {_CAP} THEN s.d * s.n_sh ELSE 0 END)
+         sum(CASE WHEN s.d * f.k > {RARE_SHINGLE_CAP} THEN s.d * s.n_sh ELSE 0 END)
            AS inst_capped
   FROM factors f CROSS JOIN spectrum s GROUP BY f.k
 ),
 doc_curve AS (
   SELECT f.k,
          sum(m.n_docs) AS n_docs,
-         sum(CASE WHEN m.d * f.k > {_CAP} THEN m.n_docs ELSE 0 END)
+         sum(CASE WHEN m.d * f.k > {RARE_SHINGLE_CAP} THEN m.n_docs ELSE 0 END)
            AS n_docs_blind
   FROM factors f CROSS JOIN mind m GROUP BY f.k
 )
@@ -697,13 +697,8 @@ def text_shingle_df_cap_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (no float-sum surface; the denominators are > 0 whenever a
     row exists — a shingle-free corpus emits ZERO rows on both engines,
     never a 0/0)."""
-    from ai_dataingestion_spark.ai.dedup import _SHINGLES_EXPR
-
-    t = Tables(spark, sf_dir)
-    docs = (
-        t.documents.withColumn("toks", F.split("text", " "))
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
-        .transform(op_cache)
+    docs = shingle_sets(
+        Tables(spark, sf_dir).documents.select("doc_id", "text")
     )
     inst = docs.select("doc_id", F.explode("shingles").alias("sh"))
     # op_cache: df feeds BOTH the spectrum aggregate and the per-doc
@@ -732,7 +727,7 @@ def text_shingle_df_cap_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggs = []
         for total_name, (weight, capped_name) in weights.items():
             capped = F.when(
-                F.col("d") * F.col("k") > _CAP, weight
+                F.col("d") * F.col("k") > RARE_SHINGLE_CAP, weight
             ).otherwise(F.lit(0))
             aggs.append(F.sum(weight).cast("bigint").alias(total_name))
             aggs.append(F.sum(capped).cast("bigint").alias(capped_name))

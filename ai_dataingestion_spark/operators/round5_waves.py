@@ -17,7 +17,7 @@ from ai_dataingestion_spark.functions.portable import (
 )
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.scale import (
-    ARRAY_TABLE_BYTES as _ARRAY_MERGE_LIMIT,
+    ARRAY_TABLE_BYTES,
     bounded_self_join,
     broadcast_if_small,
     hint_merge_if_large,
@@ -28,13 +28,13 @@ from ai_dataingestion_spark.ai.dedup import (
     _CW_B,
     _DUP_OFFSET,
     _MERSENNE_P,
-    _SHINGLES_EXPR,
     _corpus_with_near_dups,
     _duck_h,
     _minhash_band_bucket,
     minhash_candidates,
-    minhash_shingles,
     minhash_signature,
+    shingle_pair_sides,
+    shingle_sets,
     N_BANDS,
     N_HASHES,
     SHINGLE_K,
@@ -2614,7 +2614,7 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(x·1e6+0.5)/1e6 rounding (SURVEY §5.4 round-tie trap)."""
     # the shingled relation (op_cached by the kernel) feeds the signature
     # AND the exact-Jaccard verify.
-    docs = minhash_shingles(_corpus_with_near_dups(spark, sf_dir))
+    docs = shingle_sets(_corpus_with_near_dups(spark, sf_dir))
     # cache: both pair sides consume sig — uncached, Spark replays the
     # explode + 32-min aggregation per side. docs-count-sized (33 cols).
     sig = minhash_signature(docs).transform(op_cache)
@@ -2758,16 +2758,11 @@ def text_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     index rests on (ai/dedup.py): a heavy tail above the cap means the
     hot-hash rescue path actually carries load. Two chained
     partial-aggregable groupBys; the spectrum is ≤ max-df rows."""
-    from ai_dataingestion_spark.ai.dedup import _SHINGLES_EXPR
-
-    t = Tables(spark, sf_dir)
-    # op_cache: exploding the shingle transform directly re-evaluates the
-    # slice-per-index lambda pathologically on giant token arrays (38 s vs
-    # 0.3 s from cache on the extremes tier, round 10)
-    docs = (
-        t.documents.withColumn("toks", F.split("text", " "))
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
-        .transform(op_cache)
+    # shingle_sets' op_cache: exploding the shingle transform directly
+    # re-evaluates the slice-per-index lambda pathologically on giant token
+    # arrays (38 s vs 0.3 s from cache on the extremes tier, round 10)
+    docs = shingle_sets(
+        Tables(spark, sf_dir).documents.select("doc_id", "text")
     )
     df = (
         docs.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -3470,7 +3465,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the 4-row config frame is one stack() literal. Build time
     # measured 1.65 s -> 0.50 s warm; the parsed trees are term-for-term
     # the Column forms.
-    docs = minhash_shingles(_corpus_with_near_dups(spark, sf_dir))
+    docs = shingle_sets(_corpus_with_near_dups(spark, sf_dir))
     sig = minhash_signature(docs).transform(op_cache)
 
     # Optimization r16 (guide §2.4 + §3.3 plan-size note): the first draft
@@ -3494,7 +3489,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         bounded_self_join(
             banded, ["bands", "rows_per_band", "band", "bucket"], "doc_id",
-            sf_dir, "documents", gate=_ARRAY_MERGE_LIMIT,
+            sf_dir, "documents", gate=ARRAY_TABLE_BYTES,
             carry=["bands", "rows_per_band"],
         )
         .select("bands", "rows_per_band", "id1", "id2")
@@ -3929,10 +3924,6 @@ corpus AS (
 """
 
 
-# _ARRAY_MERGE_LIMIT is scale.ARRAY_TABLE_BYTES (imported at top): one home
-# for the array-table merge gate so scale.py recalibrations reach every site.
-
-
 @register(
     "dedup_removal_plan",
     oracle="WITH "
@@ -4036,20 +4027,17 @@ def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The kernel's op_cached shingle relation feeds the signature build AND
     # both verify sides of the candidate join, so the explode+dedup of
     # shingles runs once, not 3x.
-    docs = minhash_shingles(corpus)
+    docs = shingle_sets(corpus)
     cand = minhash_candidates(minhash_signature(docs), sf_dir)
-    sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
     union = F.size(F.array_union("sh1", "sh2")).cast("double")
     # merge gate at 1 MiB (not the 64 MiB join default): shingle-ARRAY
     # relations expand ~100x from the compressed text bytes, and the
     # broadcast OOM measured at the sfx1.0 sweep happened at just 5.3 MB
-    # of documents parquet (ai/dedup.py:558 rule). Sort-merge spills where
-    # both broadcast and shuffled-hash builds cannot.
+    # of documents parquet. Sort-merge spills where both broadcast and
+    # shuffled-hash builds cannot.
     near_removed = (
-        cand.join(hint_merge_if_large(sh1, sf_dir, "documents", _ARRAY_MERGE_LIMIT), "id1")
-        .join(hint_merge_if_large(sh2, sf_dir, "documents", _ARRAY_MERGE_LIMIT), "id2")
+        shingle_pair_sides(cand, docs, sf_dir, hint=hint_merge_if_large)
         .filter(inter / union >= 0.6)
         .select(F.col("id2").alias("doc_id"))
         .distinct()

@@ -21,8 +21,9 @@ from ai_dataingestion_spark.ai.dedup import (
     _duck_h,
     _spark_h,
     minhash_candidates,
-    minhash_shingles,
     minhash_signature,
+    shingle_pair_sides,
+    shingle_sets,
 )
 import os
 import math
@@ -1878,23 +1879,16 @@ def dedup_eval_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     named against-truth, not absolute). This is the measurement layer
     a dedup pipeline ships with: the same operator, re-pointed at a
     labeled corpus, becomes its regression gate."""
-    docs = minhash_shingles(_corpus_with_near_dups(spark, sf_dir))
+    docs = shingle_sets(_corpus_with_near_dups(spark, sf_dir))
     cand = minhash_candidates(minhash_signature(docs), sf_dir)
-    sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
     union = F.size(F.array_union("sh1", "sh2")).cast("double")
-    # hint_array_side: cached shingle stats under-count the arrays —
-    # Catalyst would broadcast and OOM the driver at 10x (scale.py rule)
-    from ai_dataingestion_spark.scale import hint_array_side
-
     # r17: detected feeds BOTH the true-positive semi-join and the
     # n_detected count — uncached, the whole LSH candidate+verify chain
     # executed once per branch (guide §5, the kmeans-a2 pattern); the
     # cached relation is two ids per detected pair, corpus-bounded.
     detected = (
-        cand.join(hint_array_side(sh1, sf_dir, "documents"), "id1")
-        .join(hint_array_side(sh2, sf_dir, "documents"), "id2")
+        shingle_pair_sides(cand, docs, sf_dir)
         .filter(inter / union >= 0.6)
         .select("id1", "id2")
         .transform(op_cache)

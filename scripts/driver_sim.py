@@ -42,9 +42,10 @@ class NonScalarCell(Exception):
 
 
 def norm_cell(v):
-    # Type-strict on int-vs-float (mirrors tests/parity.py): the driver's
-    # value hash distinguishes int64 from float64, so 1234 vs 1234.0 must
-    # fail here too (the round-2 text_lang_stats HUGEINT trap).
+    # Type-strict on int-vs-float: the driver's value hash distinguishes
+    # int64 from float64, so 1234 vs 1234.0 must fail here too (the round-2
+    # text_lang_stats HUGEINT trap). Floats are tagged ("f", value) so they
+    # never compare equal to ints.
     if v is None:
         return None
     if isinstance(v, float):
@@ -69,6 +70,35 @@ def canon(df: pd.DataFrame):
     rows = [tuple(norm_cell(v) for v in r) for r in df[cols].itertuples(index=False)]
     rows.sort(key=lambda r: tuple((x is None, str(type(x)), str(x)) for x in r))
     return cols, rows
+
+
+def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per corpus table under ``sf_dir``,
+    read the way the engine reads it."""
+    from ai_dataingestion_spark.registry import SCHEMAS
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            # Directory tables (layout/drift tiers, Spark-written scale-up
+            # corpora) may carry schema DRIFT across part files: the engine
+            # reads them with the declared schema (registry.load_table),
+            # which widens narrowed types, NULL-fills file-missing columns
+            # and prunes file-extra ones. union_by_name is DuckDB's
+            # equivalent read posture; projecting the declared column list
+            # mirrors the pruning (SELECT * would leak drift-added columns
+            # into the oracle views).
+            cols = ", ".join(f.name for f in SCHEMAS[t].fields)
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT {cols} FROM read_parquet("
+                f"'{path}/*.parquet', union_by_name=true)"
+            )
+        else:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
+            )
+    return con
 
 
 def corpus_fingerprint(sf_dir: str) -> dict:
@@ -188,29 +218,7 @@ def main() -> int:
     oracles = mod.oracle_sql()
     ids = args.queries or sorted(qs)
 
-    con = duckdb.connect()
-    from ai_dataingestion_spark.registry import SCHEMAS
-
-    for t in TABLES:
-        path = f"{args.sf_dir}/{t}.parquet"
-        if os.path.isdir(path):
-            # Directory tables (layout/drift tiers, Spark-written scale-up
-            # corpora) may carry schema DRIFT across part files: the engine
-            # reads them with the declared schema (registry.load_table),
-            # which widens narrowed types, NULL-fills file-missing columns
-            # and prunes file-extra ones. union_by_name is DuckDB's
-            # equivalent read posture; projecting the declared column list
-            # mirrors the pruning (SELECT * would leak drift-added columns
-            # into the oracle views).
-            cols = ", ".join(f.name for f in SCHEMAS[t].fields)
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT {cols} FROM read_parquet("
-                f"'{path}/*.parquet', union_by_name=true)"
-            )
-        else:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
+    con = duckdb_connect(args.sf_dir)
 
     n_ok = n_fail = n_rows_only = 0
     for qid in ids:

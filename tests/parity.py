@@ -3,81 +3,24 @@
 Runs a registered QuerySpec on Spark and its oracle SQL on DuckDB over the
 same parquet directory, then compares row count, column names, and the
 order-insensitive multiset of values — strictly (exact equality), because the
-driver hashes values rather than applying tolerances.
+driver hashes values rather than applying tolerances. The views and the
+value rules are scripts/driver_sim.py's own (``duckdb_connect``, ``canon``).
 """
 
 from __future__ import annotations
 
-import math
-from datetime import datetime
+import os
+import sys
 
 import duckdb
-import numpy as np
-import pandas as pd
 
-from ai_dataingestion_spark.registry import SCHEMAS, TABLE_NAMES
-
-
-def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = f"{sf_dir}/{name}.parquet"
-        # directory-layout tables (layout/drift tiers, Spark-written dirs)
-        # need the part-file glob AND the schema-evolution read posture,
-        # exactly as scripts/driver_sim.py does: union_by_name absorbs
-        # per-file drift; projecting the declared columns mirrors the
-        # engine's declared-schema pruning of drift-added columns
-        if os.path.isdir(path):
-            cols = ", ".join(f.name for f in SCHEMAS[name].fields)
-            con.execute(
-                f"CREATE OR REPLACE VIEW {name} AS SELECT {cols} "
-                f"FROM read_parquet('{path}/*.parquet', union_by_name=true)"
-            )
-        else:
-            con.execute(
-                f"CREATE OR REPLACE VIEW {name} AS "
-                f"SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-def _norm_cell(v):
-    """Normalize a cell for cross-engine comparison.
-
-    Type-strict on the int-vs-float axis: the driver's value hash is
-    type-sensitive, so ``1234`` (Spark int64) vs ``1234.0`` (DuckDB HUGEINT
-    materialized as float64) must FAIL here the way it fails there — Python's
-    ``1234 == 1234.0`` being True is exactly how the round-2
-    ``text_lang_stats`` oracle bug slipped past this harness (VERDICT r2 §2).
-    Floats are tagged ``("f", value)`` so they never compare equal to ints.
-    """
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("f", "nan")
-        return ("f", v)
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    if isinstance(v, datetime):
-        return v
-    if isinstance(v, np.ndarray):
-        return tuple(_norm_cell(x) for x in v.tolist())
-    if hasattr(v, "item"):  # numpy scalar
-        return _norm_cell(v.item())
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm_cell(x) for x in v)
-    return v
-
-
-def _canon(df: pd.DataFrame) -> tuple[list[str], list[tuple]]:
-    cols = sorted(df.columns)
-    out = df[cols]
-    rows = [tuple(_norm_cell(v) for v in row) for row in out.itertuples(index=False)]
-    rows.sort(key=lambda r: tuple((x is None, str(type(x)), str(x)) for x in r))
-    return cols, rows
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+)
+# One comparison rule: the DuckDB views, cell normalisation and row canon of
+# the driver simulator, which rejects non-scalar cells the way the driver
+# does (NonScalarCell) instead of tuple-izing them.
+from driver_sim import canon, duckdb_connect  # noqa: E402,F401
 
 
 def _is_worker_spawn_flake(exc: BaseException) -> bool:
@@ -124,8 +67,8 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> dict:
     """Return a comparison report; report['ok'] is the overall verdict."""
     sp = spark_df.toPandas()
     dd = con.execute(sql).fetchdf()
-    sp_cols, sp_rows = _canon(sp)
-    dd_cols, dd_rows = _canon(dd)
+    sp_cols, sp_rows = canon(sp)
+    dd_cols, dd_rows = canon(dd)
     report = {
         "ok": False,
         "spark_rows": len(sp_rows),

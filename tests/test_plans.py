@@ -317,7 +317,7 @@ def test_rescue_path_matches_string_level_cap(spark, sf_small):
     rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
     inv = rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
 
-    engine = _rare_shingle_index(inv, cap=50)  # (doc_id, h)
+    engine = _rare_shingle_index(inv, sf_small)  # (doc_id, h)
 
     # oracle definition: string-level DF cap, projected to the same
     # (doc_id, h) shape the operators join on

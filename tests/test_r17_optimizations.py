@@ -353,8 +353,8 @@ def test_minhash_kernel_candidates_match_band_tuning_8x4(spark, sf_small):
         ROWS_PER_BAND,
         _corpus_with_near_dups,
         minhash_candidates,
-        minhash_shingles,
         minhash_signature,
+        shingle_sets,
     )
     from ai_dataingestion_spark.catalog import all_specs
     from ai_dataingestion_spark.opcache import release_op_caches
@@ -364,7 +364,7 @@ def test_minhash_kernel_candidates_match_band_tuning_8x4(spark, sf_small):
         for r in all_specs()["dedup_lsh_band_tuning"].fn(spark, sf_small).collect()
     }
     try:
-        docs = minhash_shingles(_corpus_with_near_dups(spark, sf_small))
+        docs = shingle_sets(_corpus_with_near_dups(spark, sf_small))
         n_kernel = minhash_candidates(minhash_signature(docs), sf_small).count()
     finally:
         release_op_caches()
